@@ -136,14 +136,14 @@ def main(argv=None) -> int:
                                           cfg.snapshot_id)),
             "wet", cfg.snapshot_id)
 
-    stats = pipeline_stats(metrics).toPandas().iloc[0].to_dict()
+    # a Row keeps each aggregate's own type (counts stay int); a pandas
+    # frame would upcast every column holding a NULL to float64
+    stats = pipeline_stats(metrics).first().asDict()
 
     def _plain(v):
-        v = v.item() if hasattr(v, "item") else v
         # an empty/fully-filtered input makes the sum/avg aggregates
-        # NULL -> NaN through pandas; json.dumps would print the
-        # non-standard literal NaN and break strict stdout consumers
-        return 0 if isinstance(v, float) and v != v else v
+        # NULL; report 0 so strict stdout consumers get a number
+        return 0 if v is None else v
 
     print(json.dumps({k: _plain(v) for k, v in stats.items()}))
     if existing is None:

@@ -14,17 +14,26 @@ def _stage_pages(path, rows) -> str:
     for every CLI test in this module."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    pdf = pd.DataFrame(rows)
-    pdf["warc_ts"] = pd.to_datetime(pdf["warc_ts"], utc=True).dt.tz_localize(None)
     schema = pa.schema([("url", pa.string()), ("warc_ts", pa.timestamp("us")),
                         ("html", pa.binary()), ("text", pa.string()),
                         ("lang", pa.string())])
+    pdf = pd.DataFrame(rows, columns=schema.names)
+    pdf["warc_ts"] = pd.to_datetime(pdf["warc_ts"], utc=True).dt.tz_localize(None)
     pq.write_table(pa.Table.from_pandas(pdf, schema=schema,
                                         preserve_index=False), str(path))
     return str(path)
 
 
-def test_job_main_end_to_end(spark, t2_rows, tmp_path):
+COUNT_FIELDS = ("pages_processed", "pages_ok", "pages_failed", "total_blocks",
+                "total_blocks_kept", "total_entities", "total_matches")
+
+
+def _stats_line(capsys) -> dict:
+    import json
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_job_main_end_to_end(spark, t2_rows, tmp_path, capsys):
     import extract as job
 
     pages_path = _stage_pages(tmp_path / "pages.parquet", t2_rows[:80])
@@ -32,6 +41,10 @@ def test_job_main_end_to_end(spark, t2_rows, tmp_path):
     rc = job.main(["--pages", pages_path, "--warehouse", wh,
                    "--snapshot-id", "r1", "--buckets", "3"])
     assert rc == 0
+    stats = _stats_line(capsys)
+    for k in COUNT_FIELDS:
+        assert type(stats[k]) is int, (k, stats[k])
+    assert stats["pages_processed"] == 80 and stats["pages_failed"] == 0
 
     from ukrainian_ocr_pipeline_spark.sources.catalog import SnapshotCatalog
     cat = SnapshotCatalog(wh)
@@ -47,6 +60,24 @@ def test_job_main_end_to_end(spark, t2_rows, tmp_path):
 
     lineage = cat.read_snapshot(spark, "lineage", "r1").toPandas()
     assert lineage.n_rows.sum() == 80 and lineage.n_err.sum() == 0
+
+
+def test_job_main_empty_pages(spark, tmp_path, capsys):
+    """An empty pages input commits readable, empty tables and reports
+    zero counts (the NULL sums of an empty input print as 0)."""
+    import extract as job
+
+    pages_path = _stage_pages(tmp_path / "pages.parquet", [])
+    wh = str(tmp_path / "wh")
+    assert job.main(["--pages", pages_path, "--warehouse", wh,
+                     "--snapshot-id", "e1", "--buckets", "4"]) == 0
+    stats = _stats_line(capsys)
+    assert {k: stats[k] for k in COUNT_FIELDS} == dict.fromkeys(COUNT_FIELDS, 0)
+
+    from ukrainian_ocr_pipeline_spark.sources.catalog import SnapshotCatalog
+    cat = SnapshotCatalog(wh)
+    for table in ("enriched", "extracted", "metrics", "lineage"):
+        assert cat.read_snapshot(spark, table, "e1").count() == 0, table
 
 
 def test_stream_job_incremental_end_to_end(spark, t2_rows, tmp_path):

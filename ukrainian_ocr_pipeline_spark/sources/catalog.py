@@ -11,9 +11,11 @@ provides the same contract on plain Parquet:
     state (readers never list the data dir),
   * a write is: stage bucket files -> fsync -> atomically rename a JSON
     manifest into snapshots/ (rename is the commit point),
-  * resume: a writer records per-bucket completion markers; a restarted
-    job skips buckets whose marker matches (input_snapshot, bucket_id) —
-    the north rule's "resumes from the last committed checkpoint",
+  * resume: a writer computes the buckets in waves, one Spark job per
+    wave, and publishes each bucket of a wave with a completion marker;
+    a restarted job skips buckets whose marker matches (input_snapshot,
+    bucket_id) — the north rule's "resumes from the last committed
+    checkpoint" — so a crash loses at most one wave of work,
   * idempotence: re-running a committed (input_snapshot, job) is a no-op.
 
 Reference analog: the per-item error capture + summary reporting of
@@ -78,6 +80,45 @@ def _marker_attempt_dir(marker_path: str) -> str:
     """Inverse of :func:`_owner_marker`."""
     d, b = os.path.split(marker_path)
     return os.path.join(d, b[1:-len(".writer.json")])
+
+
+def _gc_dead_attempts(parent: str, prefix: str,
+                      keep: frozenset | set = frozenset()) -> list[str]:
+    """Remove `prefix`* attempt dirs under `parent` whose writer is dead
+    (crash leftovers), and dangling owner files of writers that died
+    before their dir appeared.  Dirs in `keep` are never touched."""
+    removed = []
+    for name in sorted(os.listdir(parent)):
+        path = os.path.join(parent, name)
+        if name.startswith(prefix) and os.path.isdir(path):
+            if path in keep or _owner_alive(_owner_marker(path)):
+                continue
+            shutil.rmtree(path, ignore_errors=True)
+            _unlink_quiet(_owner_marker(path))
+            removed.append(path)
+        elif (name.startswith("_" + prefix) and name.endswith(".writer.json")
+              and not os.path.isdir(_marker_attempt_dir(path))
+              and not _owner_alive(path)):
+            _unlink_quiet(path)
+            removed.append(path)
+    return removed
+
+
+def _wave_width(n_buckets: int, slots: int, partitions: int) -> int:
+    """Buckets computed per Spark job: W = ceil(n_buckets * slots /
+    partitions), so one wave's input holds at least one round of the
+    cluster's task slots; W = 1 once each bucket alone is that large."""
+    return max(1, -(-n_buckets * slots // max(1, partitions)))
+
+
+def _schema_only_file(df: DataFrame, stage: str) -> tuple[str, bytes]:
+    """(name, bytes) of the row-less parquet file Spark writes for an
+    empty `df` — what a per-bucket write of an empty bucket leaves."""
+    path = os.path.join(stage, "_empty")
+    df.limit(0).write.parquet(path)
+    name = next(f for f in os.listdir(path) if f.endswith(".parquet"))
+    with open(os.path.join(path, name), "rb") as fh:
+        return name, fh.read()
 
 
 def _lease_holder(path: str) -> int | None:
@@ -204,13 +245,7 @@ class SnapshotCatalog:
         # winner: GC sibling attempt dirs whose writer is dead (crashed
         # attempts would otherwise leak a full dataset copy each); live
         # concurrent losers clean up after themselves on CommitConflict
-        for d in os.listdir(stage_root):
-            path = os.path.join(stage_root, d)
-            if (path != stage_dir and d.startswith("attempt-")
-                    and os.path.isdir(path)
-                    and not _owner_alive(_owner_marker(path))):
-                shutil.rmtree(path, ignore_errors=True)
-                _unlink_quiet(_owner_marker(path))
+        _gc_dead_attempts(stage_root, "attempt-", keep={stage_dir})
         return manifest
 
     def write_snapshot_bucketed(self, pages: DataFrame, table: str,
@@ -219,15 +254,24 @@ class SnapshotCatalog:
                                 fail_after_bucket: int | None = None) -> dict:
         """Bucket-granular resumable write (the resume-semantics path).
 
-        Buckets rows by hash(key_col) % n_buckets and runs `transform`
-        per bucket as an independent job; each completed bucket drops a
-        marker file.  A restarted writer skips marked buckets, so work
-        lost to a crash is at most one bucket.  `fail_after_bucket` is a
-        test hook simulating a crash mid-write.
+        Buckets rows by pmod(xxhash64(key_col), n_buckets) and computes
+        the pending buckets in waves of W: one `transform` call and one
+        Spark job per wave, written with partitionBy("bucket") into a
+        staging dir beside data-<snapshot_id>.  The driver then publishes
+        the wave bucket by bucket: rename bucket=K into the data dir,
+        then drop its marker file.  A restarted writer skips marked
+        buckets and discards the staging dirs of earlier attempts, so
+        work lost to a crash is at most one wave.  `fail_after_bucket`
+        is a test hook simulating a crash once more than that many
+        buckets are published (possibly mid-wave).
 
-        Scale note: per-bucket jobs exist for commit granularity, not
-        parallelism — WITHIN a bucket the job uses the full cluster.  At
-        10^12 docs, n_buckets ~ O(10^3) keeps restart loss ~0.1% of work.
+        Scale note: W = ceil(n_buckets * P / S), P the cluster's task
+        slots (defaultParallelism) and S the input's partitions, so each
+        wave's input fills at least one round of slots.  Small inputs
+        run in one wave (one job, one scan); once a bucket alone fills
+        the slots (S >= n_buckets * P — the 10^12-doc case) W = 1 and
+        each bucket is its own job, where n_buckets ~ O(10^3) keeps
+        restart loss ~0.1% of work.
         """
         if self.is_committed(table, snapshot_id):
             return next(s for s in self.snapshots(table)
@@ -309,41 +353,67 @@ class SnapshotCatalog:
         else:
             with open(params_path, "w", encoding="utf-8") as fh:
                 json.dump(params, fh)
+        # we hold the lease, so every staging dir of this snapshot is an
+        # earlier attempt's unpublished wave: never read, never resumed
+        tdir = self._table_dir(table)
+        prefix = f"staging-{snapshot_id}-"
+        for d in os.listdir(tdir):
+            if d.startswith(prefix) and len(d) == len(prefix) + 32:
+                shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
+                _unlink_quiet(_owner_marker(os.path.join(tdir, d)))
+        pending = [b for b in range(n_buckets) if not os.path.exists(
+            os.path.join(markers, f"bucket-{b}.done"))]
+        width = _wave_width(
+            n_buckets, pages.sparkSession.sparkContext.defaultParallelism,
+            pages.rdd.getNumPartitions()) if pending else 1
         bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-        done = 0
-        for b in range(n_buckets):
-            marker = os.path.join(markers, f"bucket-{b}.done")
-            if os.path.exists(marker):
-                continue  # resume: already committed by a previous attempt
-            part_dir = os.path.join(data_dir, f"bucket={b}")
-            if os.path.exists(part_dir):
-                shutil.rmtree(part_dir)  # partial output from a crash
-            out = transform(pages.where(bucket == b))
-            out.write.mode("overwrite").parquet(part_dir)
-            with open(marker, "w", encoding="utf-8") as fh:
-                fh.write(json.dumps({"bucket": b, "snapshot_id": snapshot_id}))
-            done += 1
-            if fail_after_bucket is not None and done > fail_after_bucket:
-                raise RuntimeError(f"simulated crash after bucket {b}")
+        published = 0
+        empty_file = None  # (name, bytes) of a schema-only parquet file
+        for i in range(0, len(pending), width):
+            wave = pending[i:i + width]
+            stage = os.path.join(tdir, prefix + uuid.uuid4().hex)
+            owner = _owner_marker(stage)
+            _write_owner(owner)
+            out = transform(pages.where(bucket.isin(wave)))
+            if key_col not in out.columns or "bucket" in out.columns:
+                raise ValueError(
+                    f"bucketed transform output must keep {key_col!r} and "
+                    f"must not carry a 'bucket' column: {out.columns}")
+            out.withColumn("bucket", bucket).write.partitionBy("bucket").parquet(stage)
+            staged = {d for d in os.listdir(stage) if d.startswith("bucket=")}
+            if not staged <= {f"bucket={b}" for b in wave}:
+                raise ValueError(
+                    f"bucketed transform changed {key_col!r}: rows hash "
+                    f"outside their wave ({sorted(staged)} vs {wave})")
+            for b in wave:
+                if f"bucket={b}" not in staged:
+                    # no rows hash here: a schema-only file keeps the
+                    # bucket=K layout and an all-empty input readable
+                    empty_file = empty_file or _schema_only_file(out, stage)
+                    part = os.path.join(stage, f"bucket={b}")
+                    os.makedirs(part)
+                    with open(os.path.join(part, empty_file[0]), "wb") as fh:
+                        fh.write(empty_file[1])
+            os.makedirs(data_dir, exist_ok=True)
+            for b in wave:
+                dest = os.path.join(data_dir, f"bucket={b}")
+                if os.path.exists(dest):
+                    shutil.rmtree(dest)  # published, crashed before its marker
+                os.rename(os.path.join(stage, f"bucket={b}"), dest)
+                with open(os.path.join(markers, f"bucket-{b}.done"), "w",
+                          encoding="utf-8") as fh:
+                    fh.write(json.dumps({"bucket": b, "snapshot_id": snapshot_id}))
+                published += 1
+                if fail_after_bucket is not None and published > fail_after_bucket:
+                    raise RuntimeError(f"simulated crash after bucket {b}")
+            shutil.rmtree(stage, ignore_errors=True)
+            _unlink_quiet(owner)
         # GC dead full-mode attempt leftovers from the shared root BEFORE
         # committing: the bucketed manifest points at data_dir itself, so
         # a crashed write_snapshot attempt-* left inside would be read
         # back (recursiveFileLookup) as foreign rows
         if os.path.isdir(data_dir):
-            for d in os.listdir(data_dir):
-                sub = os.path.join(data_dir, d)
-                if (d.startswith("attempt-") and os.path.isdir(sub)
-                        and not _owner_alive(_owner_marker(sub))):
-                    shutil.rmtree(sub, ignore_errors=True)
-                    _unlink_quiet(_owner_marker(sub))
-                elif (d.startswith("_attempt-")
-                      and d.endswith(".writer.json")
-                      and not os.path.isdir(_marker_attempt_dir(sub))
-                      and not _owner_alive(sub)):
-                    # dangling owner FILE (writer died before its
-                    # parquet dir appeared): harmless to Spark reads
-                    # (underscore-prefixed) but GC it anyway
-                    _unlink_quiet(sub)
+            _gc_dead_attempts(data_dir, "attempt-")
         try:
             manifest = self._commit(table, {
                 "snapshot_id": snapshot_id, "parent": None, "data_dir": data_dir,
@@ -374,25 +444,12 @@ class SnapshotCatalog:
         if not os.path.isdir(tdir):
             return removed
         referenced = {m["data_dir"] for m in self.snapshots(table)}
+        # staging dirs of bucketed writers sit beside the data dirs
+        removed += _gc_dead_attempts(tdir, "staging-")
         for entry in sorted(os.listdir(tdir)):
             path = os.path.join(tdir, entry)
             if entry.startswith("data-") and os.path.isdir(path):
-                for sub in sorted(os.listdir(path)):
-                    apath = os.path.join(path, sub)
-                    if (sub.startswith("attempt-") and os.path.isdir(apath)
-                            and apath not in referenced
-                            and not _owner_alive(_owner_marker(apath))):
-                        shutil.rmtree(apath, ignore_errors=True)
-                        _unlink_quiet(_owner_marker(apath))
-                        removed.append(apath)
-                    elif (sub.startswith("_attempt-")
-                          and sub.endswith(".writer.json")
-                          and not os.path.isdir(_marker_attempt_dir(apath))
-                          and not _owner_alive(apath)):
-                        # dangling owner file: writer died between marker
-                        # creation and the parquet write creating its dir
-                        _unlink_quiet(apath)
-                        removed.append(apath)
+                removed += _gc_dead_attempts(path, "attempt-", keep=referenced)
             elif entry.startswith("markers-") and os.path.isdir(path):
                 snap = entry[len("markers-"):]
                 if self.is_committed(table, snap) and not _owner_alive(

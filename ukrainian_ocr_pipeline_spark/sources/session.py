@@ -12,13 +12,19 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = "512"
 
 
+def host_cpus() -> int:
+    """CPUs this process may run on (the affinity mask, not the
+    machine's count: a pinned or containerised driver sees fewer)."""
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(app: str = "ukrainian_ocr_pipeline_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               extra: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus())
     master = master or f"local[{cpus}]"
-    n_threads = int(master[master.index("[") + 1:-1]) if "[" in master and master[-1] == "]" and master[master.index("[") + 1:-1].isdigit() else 32
+    n_threads = int(master[master.index("[") + 1:-1]) if "[" in master and master[-1] == "]" and master[master.index("[") + 1:-1].isdigit() else host_cpus()
     b = (
         SparkSession.builder
         .master(master)
