@@ -34,17 +34,22 @@ import os
 import sys
 
 
-def _make_sink(spark, out_dir, counter):
+def _make_sink(out_dir, counter):
     """THE idempotent per-batch sink both modes share: overwrite by
     batch_id (re-delivered batches rewrite, never duplicate), and count
-    from the WRITTEN parquet (footer metadata) — counting the
-    unpersisted batch would run the whole upstream chain a second
-    time."""
+    the rows the write itself passes through a fresh per-batch
+    Observation — counting the unpersisted batch would run the whole
+    upstream chain a second time, and reading the written files back
+    would cost a second Spark job."""
+    from pyspark.sql import Observation, functions as F
+
     def sink(batch_df, batch_id):
         counter["batches"] += 1
         path = os.path.join(out_dir, f"batch_id={batch_id}")
-        batch_df.write.mode("overwrite").parquet(path)
-        counter["n"] += spark.read.parquet(path).count()
+        obs = Observation()
+        (batch_df.observe(obs, F.count(F.lit(1)).alias("rows"))
+         .write.mode("overwrite").parquet(path))
+        counter["n"] += obs.get["rows"]
 
     return sink
 
@@ -148,7 +153,7 @@ def main(argv=None) -> int:
         novel = neardup_stream(stream, watermark=args.neardup_watermark)
         counter = {"n": 0, "batches": 0}
         q = (novel.writeStream
-             .foreachBatch(_make_sink(spark, args.out, counter))
+             .foreachBatch(_make_sink(args.out, counter))
              .option("checkpointLocation", args.checkpoint)
              .trigger(availableNow=True)
              .start())
@@ -176,7 +181,7 @@ def main(argv=None) -> int:
     n_rows = {"n": 0, "batches": 0}
 
     q = (out_df.writeStream
-         .foreachBatch(_make_sink(spark, args.out, n_rows))
+         .foreachBatch(_make_sink(args.out, n_rows))
          .option("checkpointLocation", args.checkpoint)
          .trigger(availableNow=True)
          .start())

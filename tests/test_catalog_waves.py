@@ -1,7 +1,8 @@
 """Wave-granular bucketed writes: SnapshotCatalog.write_snapshot_bucketed
 computes a wave of buckets per Spark job and publishes the wave bucket
 by bucket.  These tests pin the empty-input cases, both wave regimes
-(W>1 and W=1) under a crash, and the job count of a one-wave write."""
+(W>1 and W=1) under a crash, the job count of a one-wave write, and the
+spread of a narrow input's wave over every task slot."""
 
 import json
 import os
@@ -43,6 +44,13 @@ def _staging_dirs(cat, table):
     tdir = cat._table_dir(table)
     return sorted(os.path.join(tdir, d) for d in os.listdir(tdir)
                   if d.startswith("staging-"))
+
+
+def _py_project(df):
+    """A transform with a Python stage: an identity mapInArrow."""
+    def fn(batches):
+        yield from batches
+    return df.select("url", "lang").mapInArrow(fn, "url string, lang string")
 
 
 def _jobs_in_group(spark, group, fn):
@@ -197,3 +205,40 @@ def test_one_wave_write_runs_at_most_two_jobs(spark, tmp_path):
     assert cat.read_snapshot(spark, "t").count() == 200
     data = cat.latest_snapshot("t")["data_dir"]
     assert len(os.listdir(data)) == 64
+
+
+def test_narrow_input_spreads_wave_over_slots(spark, tmp_path):
+    """A 1-file input (S = 1 < P) runs its one wave's Python stage on
+    min(P, n_buckets) tasks; each bucket still lands in one task (one
+    data file per bucket=K) and the rows match a W = 1 write."""
+    n, slots = 8, spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "pages")
+    pages_from_fixtures(spark, 80, partitions=1).write.parquet(src)
+    pages = spark.read.parquet(src)
+    assert pages.rdd.getNumPartitions() == 1
+    cat = SnapshotCatalog(str(tmp_path / "wh"))
+    _jobs_in_group(spark, "spread", lambda: cat.write_snapshot_bucketed(
+        pages, "t", "s1", n_buckets=n, transform=_py_project))
+    st = spark.sparkContext.statusTracker()
+    stage_tasks = [st.getStageInfo(s).numTasks
+                   for j in st.getJobIdsForGroup("spread")
+                   for s in st.getJobInfo(j).stageIds if st.getStageInfo(s)]
+    assert max(stage_tasks) >= min(slots, n)
+
+    data = cat.latest_snapshot("t")["data_dir"]
+    for b in range(n):
+        files = [f for f in os.listdir(os.path.join(data, f"bucket={b}"))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (b, files)
+    placed = (spark.read.option("basePath", data).parquet(data)
+              .select("bucket", F.pmod(F.xxhash64("url"), F.lit(n)).alias("want"))
+              .toPandas())
+    assert len(placed) == 80 and (placed.bucket == placed.want).all()
+
+    wide = pages.repartition(n * slots)
+    assert _wave_width(n, slots, wide.rdd.getNumPartitions()) == 1
+    cat.write_snapshot_bucketed(wide, "ref", "s1", n_buckets=n,
+                                transform=_py_project)
+    got = cat.read_snapshot(spark, "t").orderBy("url").toPandas()
+    ref = cat.read_snapshot(spark, "ref").orderBy("url").toPandas()
+    pd.testing.assert_frame_equal(got, ref)

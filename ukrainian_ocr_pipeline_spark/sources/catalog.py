@@ -8,11 +8,14 @@ provides the same contract on plain Parquet:
 
   * a table is a directory of immutable bucket files plus a `snapshots/`
     dir of JSON manifests; the LATEST committed manifest defines table
-    state (readers never list the data dir),
+    state and carries the written schema, so a read infers nothing and
+    (with the session's driver-side listing) runs no Spark job,
   * a write is: stage bucket files -> fsync -> atomically rename a JSON
     manifest into snapshots/ (rename is the commit point),
   * resume: a writer computes the buckets in waves, one Spark job per
     wave, and publishes each bucket of a wave with a completion marker;
+    an input narrower than the task slots is spread by bucket id so a
+    wave still uses every slot and each bucket stays one file;
     a restarted job skips buckets whose marker matches (input_snapshot,
     bucket_id) — the north rule's "resumes from the last committed
     checkpoint" — so a crash loses at most one wave of work,
@@ -32,6 +35,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(Exception):
@@ -233,7 +237,7 @@ class SnapshotCatalog:
             manifest = self._commit(table, {
                 "snapshot_id": snapshot_id, "parent": parent,
                 "data_dir": stage_dir, "committed_at_unix": time.time(),
-                "mode": "full",
+                "mode": "full", "schema": df.schema.json(),
             })
         except CommitConflict:
             # lost the race: discard our stage, adopt the winner's result
@@ -268,10 +272,15 @@ class SnapshotCatalog:
         Scale note: W = ceil(n_buckets * P / S), P the cluster's task
         slots (defaultParallelism) and S the input's partitions, so each
         wave's input fills at least one round of slots.  Small inputs
-        run in one wave (one job, one scan); once a bucket alone fills
-        the slots (S >= n_buckets * P — the 10^12-doc case) W = 1 and
-        each bucket is its own job, where n_buckets ~ O(10^3) keeps
-        restart loss ~0.1% of work.
+        run in one wave (one job, one scan); an input with S < P (one
+        wave, since then W > n_buckets) is first repartitioned by bucket
+        id into min(P, n_buckets) partitions (task = bucket mod that), so
+        `transform` runs on every slot with an equal share of buckets
+        and each bucket still lands in one task (one file per bucket=K);
+        the shuffle moves at most S * maxPartitionBytes < P * 64 MB.
+        Once a bucket alone fills the slots (S >= n_buckets * P — the
+        10^12-doc case) W = 1 and each bucket is its own job, where
+        n_buckets ~ O(10^3) keeps restart loss ~0.1% of work.
         """
         if self.is_committed(table, snapshot_id):
             return next(s for s in self.snapshots(table)
@@ -363,10 +372,18 @@ class SnapshotCatalog:
                 _unlink_quiet(_owner_marker(os.path.join(tdir, d)))
         pending = [b for b in range(n_buckets) if not os.path.exists(
             os.path.join(markers, f"bucket-{b}.done"))]
-        width = _wave_width(
-            n_buckets, pages.sparkSession.sparkContext.defaultParallelism,
-            pages.rdd.getNumPartitions()) if pending else 1
         bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+        width, spread = 1, 0
+        if pending:
+            slots = pages.sparkSession.sparkContext.defaultParallelism
+            parts = pages.rdd.getNumPartitions()
+            width = _wave_width(n_buckets, slots, parts)
+            if parts < slots:
+                # one wave (W > n_buckets): spread it over the slots
+                spread = min(slots, n_buckets)
+        # the manifest records the written schema; with nothing pending
+        # (every bucket published before a crash) the plan still has it
+        schema = None if pending else transform(pages).schema.json()
         published = 0
         empty_file = None  # (name, bytes) of a schema-only parquet file
         for i in range(0, len(pending), width):
@@ -374,7 +391,13 @@ class SnapshotCatalog:
             stage = os.path.join(tdir, prefix + uuid.uuid4().hex)
             owner = _owner_marker(stage)
             _write_owner(owner)
-            out = transform(pages.where(bucket.isin(wave)))
+            rows = pages.where(bucket.isin(wave))
+            if spread:
+                # task = bucket mod spread: every bucket in one task, and
+                # n_buckets / spread buckets per task
+                rows = rows.repartitionById(spread, bucket.cast("int"))
+            out = transform(rows)
+            schema = out.schema.json()
             if key_col not in out.columns or "bucket" in out.columns:
                 raise ValueError(
                     f"bucketed transform output must keep {key_col!r} and "
@@ -418,7 +441,7 @@ class SnapshotCatalog:
             manifest = self._commit(table, {
                 "snapshot_id": snapshot_id, "parent": None, "data_dir": data_dir,
                 "n_buckets": n_buckets, "committed_at_unix": time.time(),
-                "mode": "bucketed",
+                "mode": "bucketed", "schema": schema,
             })
         except CommitConflict:
             # a racer committed between our lease and commit (it must
@@ -468,4 +491,8 @@ class SnapshotCatalog:
             m = snaps[-1]
         else:
             m = next(s for s in snaps if s["snapshot_id"] == snapshot_id)
-        return spark.read.option("recursiveFileLookup", "true").parquet(m["data_dir"])
+        reader = spark.read.option("recursiveFileLookup", "true")
+        if "schema" in m:
+            # the schema the writer recorded: no inference job to run
+            reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
+        return reader.parquet(m["data_dir"])
